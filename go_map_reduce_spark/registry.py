@@ -115,7 +115,8 @@ _atexit.register(_cleanup_durable_dirs)
 
 def _data_fingerprint(path: Optional[str]) -> str:
     """Recursive listing fingerprint (relative paths + sizes + mtimes)
-    of a data directory — stat-only, no content read.
+    of a data directory — stat-only, no content read.  A path to a
+    single file hashes that file's own name, size and mtime.
 
     The walk covers NESTED files too, so a rewrite inside a
     directory-style/partitioned parquet table (new part file, rewritten
@@ -133,8 +134,16 @@ def _data_fingerprint(path: Optional[str]) -> str:
         return ""
     import hashlib
     import os
+    import stat
 
     try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            # a single-file table: its own name, size and mtime
+            name = os.path.basename(path)
+            return hashlib.md5(
+                f"{name}:{st.st_size}:{st.st_mtime_ns};".encode()
+            ).hexdigest()
         os.listdir(path)
     except OSError:
         # a MISSING/unreadable root is a stable state ("no data") and

@@ -25,11 +25,12 @@ unbounded source; the window arithmetic is identical.
 
 from __future__ import annotations
 
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from go_map_reduce_spark.catalog import load_table
+from go_map_reduce_spark.catalog import load_table, parquet_schema
 from go_map_reduce_spark.functions.numeric import dsum, sql_dsum
 from go_map_reduce_spark.registry import query
 from go_map_reduce_spark.session import ensure_session_confs
@@ -38,28 +39,18 @@ from go_map_reduce_spark.session import ensure_session_confs
 # shipped events.parquet with two different ts encodings across rounds —
 # INT64 TIMESTAMP(NANOS) (reads as long under nanosAsLong) and plain
 # timestamp[us] — so the schema is probed from the parquet footer of the
-# actual file rather than hardcoded (a schema-only batch read; no data
-# job). Hardcoding LongType against a timestamp[us] file silently
-# misinterprets the values (micros reinterpreted as nanos), which is why
-# this probes instead of assuming.
-_SCHEMA_CACHE: dict[str, T.StructType] = {}
+# actual file rather than hardcoded. Hardcoding LongType against a
+# timestamp[us] file silently misinterprets the values (micros
+# reinterpreted as nanos), which is why this probes instead of assuming.
 
 
 def events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """Footer-derived schema of events.parquet for the stream source.
-
-    Memoized per resolved path: several streaming queries (and
-    events_stream_dedup twice per call) re-probe the identical footer
-    within one run; the file is driver-generated and immutable for a
-    round, so one probe per path per process suffices.
-    """
+    """Footer-derived schema of events.parquet for the stream source,
+    from the catalog's schema memo: one probe per file version, so a
+    rewrite of the file in place is probed again."""
     ensure_session_confs(spark)
-    import os as _os
+    return parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
 
-    path = _os.path.realpath(_os.path.join(sf_dir, "events.parquet"))
-    if path not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[path] = spark.read.parquet(path).schema
-    return _SCHEMA_CACHE[path]
 
 _NTZ_EPOCH = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
 

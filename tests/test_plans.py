@@ -5,6 +5,7 @@ asserted so a refactor can't silently regress them.
 
 import pytest
 
+from go_map_reduce_spark.catalog import TABLES
 from go_map_reduce_spark.registry import QUERIES
 
 
@@ -96,6 +97,65 @@ def test_tfidf_lazy_construction(spark, sf_dir):
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+
+
+RELATIONAL_MIX = (
+    "q1_pricing_summary",
+    "q3_top_orders",
+    "q6_forecast_revenue",
+    "q12_priority_linestatus",
+    "q14_promo_share",
+    "top_orders_per_customer",
+    "cube_year_status",
+    "user_sessions",
+)
+
+
+def test_relational_construction_starts_no_job(spark, sf_dir):
+    """Building these queries must start no Spark job: each table's
+    parquet schema is inferred once (register_views), and every later
+    load_table reads with that schema instead of inferring again."""
+    from go_map_reduce_spark.catalog import register_views
+
+    sc = spark.sparkContext
+    register_views(spark, sf_dir)
+    jobs = {}
+    try:
+        for name in RELATIONAL_MIX:
+            group = f"construct:{name}"
+            sc.setJobGroup(group, "construction only")
+            QUERIES[name](spark, sf_dir)
+            jobs[name] = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == {name: [] for name in RELATIONAL_MIX}
+
+
+@pytest.mark.parametrize("table", TABLES)
+def test_schema_memo_hit_keeps_plan(spark, sf_dir, table, monkeypatch):
+    """A load_table that reuses the memoized schema plans exactly like
+    one that infers it with a fresh spark.read.parquet."""
+    import re
+
+    from go_map_reduce_spark import catalog
+
+    def formatted(df):
+        jvm_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+        plan = df._jdf.queryExecution().explainString(jvm_mode)
+        return re.sub(r"#\d+", "#N", plan)
+
+    inferred = []
+    infer = catalog._infer
+    monkeypatch.setattr(catalog, "_SCHEMAS", {})
+    monkeypatch.setattr(
+        catalog, "_infer", lambda *a: inferred.append(table) or infer(*a)
+    )
+    fresh = formatted(catalog.load_table(spark, sf_dir, table))
+    hit = formatted(catalog.load_table(spark, sf_dir, table))
+    assert inferred == [table], "the second load_table was not a memo hit"
+    assert hit == fresh
 
 
 @pytest.mark.slow  # r15: multi-minute marathon; default run deselects (pytest.ini)

@@ -169,6 +169,31 @@ def test_fingerprint_sees_nested_rewrites(spark, tmp_path):
     assert calls == [3, 5]
 
 
+def test_fingerprint_sees_single_file_rewrites(tmp_path):
+    """A single-file table (the flat sf_dir layout's <table>.parquet)
+    must fingerprint the file itself: a rewrite in place changes it, and
+    two different files never share one constant token."""
+    import os
+
+    from go_map_reduce_spark.registry import _data_fingerprint
+
+    f = tmp_path / "events.parquet"
+    f.write_bytes(b"v1")
+    fp1 = _data_fingerprint(str(f))
+    assert fp1 == _data_fingerprint(str(f)), "not deterministic"
+    assert fp1 != "unreadable"
+
+    st = os.stat(f)
+    f.write_bytes(b"v2-longer")
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert _data_fingerprint(str(f)) != fp1, "single-file rewrite invisible"
+
+    g = tmp_path / "orders.parquet"
+    g.write_bytes(b"v1")
+    os.utime(g, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert _data_fingerprint(str(g)) != fp1
+
+
 def test_fingerprint_flat_layout_unchanged_semantics(tmp_path):
     """On a flat layout the recursive walk must behave exactly like the
     old readdir scan: deterministic, order-independent of creation

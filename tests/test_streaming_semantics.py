@@ -232,3 +232,32 @@ def test_stateful_query_runs_on_rocksdb_state_store(spark, sf_dir):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def test_events_schema_follows_in_place_rewrite(spark, tmp_path):
+    """events_raw_schema must probe events.parquet again after it is
+    rewritten in place with the other ts encoding: serving the INT64
+    nanos schema (LongType under nanosAsLong) for a timestamp[us] file
+    would silently read micros as nanos."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from go_map_reduce_spark.streaming.windows import events_raw_schema
+
+    path = tmp_path / "events.parquet"
+    nanos = [1_700_000_000_000_000_000, 1_700_000_000_500_000_000]
+
+    def write(ts):
+        pq.write_table(pa.table({"event_id": [1, 2], "ts": ts}), path)
+
+    def ts_type():
+        schema = events_raw_schema(spark, str(tmp_path))
+        return {f.name: f.dataType for f in schema.fields}["ts"]
+
+    write(pa.array(nanos, pa.timestamp("ns")))
+    assert isinstance(ts_type(), T.LongType)
+
+    st = os.stat(path)
+    write(pa.array([n // 1000 for n in nanos], pa.timestamp("us")))
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert isinstance(ts_type(), (T.TimestampType, T.TimestampNTZType))
