@@ -28,20 +28,46 @@ Env:
                       to be computed (the honest full-computation
                       number); see PERFORMANCE.md r09 for the measured
                       gap between the two modes.
+
+Stamp: the detail artifact carries a "stamp" object saying what run
+produced it, so two artifacts can be checked for comparability
+(tools/noop_gap.py stale_pair) instead of trusted by file name:
+  protocol             PROTOCOL — the timing rules (memo-aware reps,
+                       build-inclusive first-consumer billing, NOISY
+                       best-of-2); bumped whenever they change
+  action               "count" or "noop" (BENCH_ACTION)
+  query_set_sha256     sha256 of the sorted query names, one per line
+  git_head             `git rev-parse HEAD` of this file's directory,
+                       "unknown" when it is not a git checkout
+  cpus                 the session's local[] parallelism
+                       (SPARK_GRAFT_CPUS)
+  driver_memory        the session's spark.driver.memory
+                       (SPARK_GRAFT_DRIVER_MEM)
+  sf                   the scale factor, as in the top-level "sf"
+  steal_vs_demand_pct  host CPU steal vs demand over the run, from
+                       /proc/stat before and after
+                       (tools/steal_sample.summarize); recorded, not
+                       a comparability key
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 import go_map_reduce_spark  # noqa: E402  (populates registry)
 from go_map_reduce_spark.registry import QUERIES  # noqa: E402
 from go_map_reduce_spark.session import get_spark  # noqa: E402
+from tools.steal_sample import cpu_ticks, summarize  # noqa: E402
+
+PROTOCOL = "memo-aware-1"
 
 # Iterative / multi-job pipelines are the contention-noisiest timings
 # (driver round-trips per iteration, streaming micro-batches): take
@@ -161,6 +187,21 @@ NOISY = {
 }
 
 
+def git_head() -> str:
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=HERE, capture_output=True, text=True, timeout=10,
+        )
+    except OSError:
+        return "unknown"
+    return out.stdout.strip() if out.returncode == 0 else "unknown"
+
+
+def query_set_sha256(names) -> str:
+    return hashlib.sha256("\n".join(sorted(names)).encode()).hexdigest()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -172,6 +213,7 @@ def main() -> None:
     )
     names = [n for n in names if n in QUERIES]
 
+    ticks_before = cpu_ticks()
     spark = get_spark(app_name="gmrs-bench")
     # Warm the JVM (codegen, parquet reader, shuffle machinery) once so
     # the first timed query doesn't absorb JIT cost.
@@ -188,8 +230,9 @@ def main() -> None:
     timings: dict[str, float] = {}
     steady: dict[str, float] = {}
     total = 0.0
+    action = os.environ.get("BENCH_ACTION", "count")
 
-    def run_once(fn, action: str) -> float:
+    def run_once(fn) -> float:
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         if action == "noop":
@@ -218,14 +261,13 @@ def main() -> None:
         # every rep pays the same build cost, and the billed number is
         # build-inclusive for whichever query builds the state.
         best = float("inf")
-        action = os.environ.get("BENCH_ACTION", "count")
         snap = memo_snapshot(spark)
         for i in range(max(repeat, 2) if name in NOISY else repeat):
             if i:
                 release_caches()
                 spark.catalog.clearCache()
                 memo_restore(spark, snap)
-            best = min(best, run_once(fn, action))
+            best = min(best, run_once(fn))
         timings[name] = round(best, 4)
         total += best
         # Steady-state twin: when the query built shared state, one
@@ -233,7 +275,7 @@ def main() -> None:
         # "steady" column of BENCH_DETAIL) — informational only, never
         # part of the billed total.
         if memo_grew(spark, snap):
-            steady[name] = round(run_once(fn, action), 4)
+            steady[name] = round(run_once(fn), 4)
         print(f"# {name}: {best:.3f}s", file=sys.stderr)
         # Multi-consumer queries persist intermediates (minhash, k-means,
         # clusters); drop them so cache from query i doesn't pressure the
@@ -263,7 +305,10 @@ def main() -> None:
         # accumulation at a harmless level.
         if (len(timings) % 15) == 0:
             spark.sparkContext._jvm.System.gc()
+    cpus = spark.sparkContext.defaultParallelism
+    driver_memory = spark.conf.get("spark.driver.memory")
     spark.stop()
+    steal = summarize(ticks_before, cpu_ticks())["steal_vs_demand_pct"]
 
     sf_val = float(sf) if sf.replace(".", "", 1).isdigit() else sf
     # BENCH_DETAIL_PATH lets tests (and ad-hoc subset runs) redirect the
@@ -282,11 +327,10 @@ def main() -> None:
     ) in ("1", "true")
     suffix = ".json" if commit_artifact else ".local.json"
     default_name = (
-        "BENCH_DETAIL_NOOP" if os.environ.get("BENCH_ACTION") == "noop"
-        else "BENCH_DETAIL"
+        "BENCH_DETAIL_NOOP" if action == "noop" else "BENCH_DETAIL"
     ) + suffix
     detail_path = os.environ.get("BENCH_DETAIL_PATH") or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), default_name
+        HERE, default_name
     )
     with open(detail_path, "w") as f:
         json.dump(
@@ -302,6 +346,16 @@ def main() -> None:
                 # steady[name] is the same query re-run against the
                 # session state it built — informational, never summed.
                 "steady": steady,
+                "stamp": {
+                    "protocol": PROTOCOL,
+                    "action": action,
+                    "query_set_sha256": query_set_sha256(timings),
+                    "git_head": git_head(),
+                    "cpus": cpus,
+                    "driver_memory": driver_memory,
+                    "sf": sf_val,
+                    "steal_vs_demand_pct": round(steal, 2),
+                },
             },
             f,
             indent=1,

@@ -3,6 +3,7 @@ parses ONE JSON line with fixed keys — pin that shape end-to-end
 (subprocess, vanilla environment) so a refactor can't silently break
 the driver's BENCH_r{N} parse the way round 1's full-map overflow did."""
 
+import hashlib
 import json
 import os
 import subprocess
@@ -139,10 +140,14 @@ def test_noop_gap_contract_on_committed_pair():
     documented class cap, every undocumented query under the default
     cap.  A new aggregate-final-heavy query (or a widened known gap)
     fails HERE, not in a judge's artifact diff."""
-    from tools.noop_gap import violations
+    from tools.noop_gap import stale_pair, violations
 
     count = json.load(open(os.path.join(HERE, "BENCH_DETAIL.json")))
     noop = json.load(open(os.path.join(HERE, "BENCH_DETAIL_NOOP.json")))
+    reason = stale_pair(count, noop)
+    assert reason is None, (
+        f"stale pair: regenerate BENCH_DETAIL_NOOP.json ({reason})"
+    )
     bad = violations(count["queries"], noop["queries"])
     assert bad == [], bad
 
@@ -175,6 +180,76 @@ def test_noop_gap_flags_synthetic_widening():
     assert ratios["new_query"] == 10.0
     caps = {n: c for n, _, c in bad}
     assert caps["new_query"] == DEFAULT_CAP
+
+
+def test_noop_gap_flags_stale_pair():
+    """A count/noop pair from different runs is reported stale before
+    any ratio is judged: an unstamped artifact (the shape of every
+    artifact written before bench.py stamped them), another protocol
+    and another core count each make the pair stale; equal stamps
+    do not."""
+    from tools.noop_gap import stale_pair
+
+    def doc(action, **over):
+        stamp = {
+            "protocol": "memo-aware-1", "action": action,
+            "query_set_sha256": "ab" * 32, "git_head": "0" * 40,
+            "cpus": 4, "driver_memory": "8g", "sf": 0.1,
+            "steal_vs_demand_pct": 0.5,
+        }
+        stamp.update(over)
+        return {"queries": {"q": 1.0}, "stamp": stamp}
+
+    count = doc("count")
+    assert stale_pair(count, doc("noop", steal_vs_demand_pct=9.0)) is None
+    unstamped = {"queries": {"q": 1.0}}
+    assert "noop artifact has no stamp" in stale_pair(count, unstamped)
+    assert "count artifact has no stamp" in stale_pair(unstamped, doc("noop"))
+    assert "protocol" in stale_pair(count, doc("noop", protocol="memo-aware-0"))
+    assert "cpus" in stale_pair(count, doc("noop", cpus=32))
+    assert "actions" in stale_pair(count, doc("count"))
+
+
+def test_bench_detail_carries_stamp(tmp_path):
+    """bench.py stamps its detail artifact with every field the
+    stale-pair check compares, and the stdout line keeps its shape."""
+    from tools.noop_gap import PAIR_KEYS
+
+    detail_path = tmp_path / "BENCH_DETAIL.json"
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        BENCH_QUERIES="wordcount",
+        BENCH_DETAIL_PATH=str(detail_path),
+    )
+    out = subprocess.run(
+        [sys.executable, os.path.join(HERE, "bench.py")],
+        capture_output=True,
+        text=True,
+        env=env,
+        timeout=300,
+        cwd=HERE,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    payload = json.loads(
+        [ln for ln in out.stdout.splitlines() if ln.startswith("{")][0]
+    )
+    assert "stamp" not in payload
+    stamp = json.load(open(detail_path))["stamp"]
+    assert set(PAIR_KEYS) | {"action", "steal_vs_demand_pct"} <= set(stamp)
+    assert stamp["action"] == "count"
+    assert stamp["cpus"] == 2
+    assert stamp["driver_memory"] == "1g"
+    assert stamp["sf"] == 0.001
+    assert stamp["query_set_sha256"] == hashlib.sha256(b"wordcount").hexdigest()
+    head = subprocess.run(
+        ["git", "rev-parse", "HEAD"], capture_output=True, text=True, cwd=HERE,
+    )
+    assert stamp["git_head"] == (
+        head.stdout.strip() if head.returncode == 0 else "unknown"
+    )
 
 
 def test_plain_run_defaults_to_gitignored_local_artifact(tmp_path):

@@ -26,7 +26,7 @@ import time
 SAMPLE_SECONDS = 5.0
 
 
-def _cpu_ticks() -> tuple[int, ...]:
+def cpu_ticks() -> tuple[int, ...]:
     with open("/proc/stat") as fh:
         parts = fh.readline().split()
     return tuple(int(x) for x in parts[1:])
@@ -62,13 +62,13 @@ def main(argv: list[str]) -> int:
         return 2
 
     peaks = {"steal_pct": 0.0, "steal_vs_demand_pct": 0.0}
-    start = _cpu_ticks()
+    start = cpu_ticks()
     stop = threading.Event()
 
     def _watch() -> None:
         prev = start
         while not stop.wait(SAMPLE_SECONDS):
-            cur = _cpu_ticks()
+            cur = cpu_ticks()
             s = summarize(prev, cur)
             for k in peaks:
                 peaks[k] = max(peaks[k], s[k])
@@ -81,7 +81,7 @@ def main(argv: list[str]) -> int:
     wall = time.monotonic() - t0
     stop.set()
     t.join(timeout=SAMPLE_SECONDS + 1)
-    s = summarize(start, _cpu_ticks())
+    s = summarize(start, cpu_ticks())
     print(
         f"STEAL_SAMPLE wall={wall:.1f}s "
         f"user={s['user_pct']:.1f}% sys={s['system_pct']:.1f}% "
