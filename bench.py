@@ -39,6 +39,12 @@ produced it, so two artifacts can be checked for comparability
   query_set_sha256     sha256 of the sorted query names, one per line
   git_head             `git rev-parse HEAD` of this file's directory,
                        "unknown" when it is not a git checkout
+  git_dirty            whether tracked files differ from git_head
+                       (`git status --porcelain --untracked-files=no`
+                       is non-empty), so an artifact measured with
+                       uncommitted changes says so; null when it is
+                       not a git checkout; recorded, not a
+                       comparability key
   cpus                 the session's local[] parallelism
                        (SPARK_GRAFT_CPUS)
   driver_memory        the session's spark.driver.memory
@@ -187,15 +193,26 @@ NOISY = {
 }
 
 
-def git_head() -> str:
+def _git(*args: str) -> str | None:
+    """stdout of `git <args>` in this file's directory, None when it is
+    not a git checkout."""
     try:
         out = subprocess.run(
-            ["git", "rev-parse", "HEAD"],
-            cwd=HERE, capture_output=True, text=True, timeout=10,
+            ["git", *args], cwd=HERE, capture_output=True, text=True, timeout=10,
         )
     except OSError:
-        return "unknown"
-    return out.stdout.strip() if out.returncode == 0 else "unknown"
+        return None
+    return out.stdout if out.returncode == 0 else None
+
+
+def git_head() -> str:
+    head = _git("rev-parse", "HEAD")
+    return "unknown" if head is None else head.strip()
+
+
+def git_dirty() -> bool | None:
+    status = _git("status", "--porcelain", "--untracked-files=no")
+    return None if status is None else bool(status.strip())
 
 
 def query_set_sha256(names) -> str:
@@ -351,6 +368,7 @@ def main() -> None:
                     "action": action,
                     "query_set_sha256": query_set_sha256(timings),
                     "git_head": git_head(),
+                    "git_dirty": git_dirty(),
                     "cpus": cpus,
                     "driver_memory": driver_memory,
                     "sf": sf_val,

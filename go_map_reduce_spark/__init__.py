@@ -27,7 +27,16 @@ the reference uses in main/test-mr.sh:64-131, with DuckDB playing the
 role of mrsequential).
 """
 
-from go_map_reduce_spark import registry  # noqa: F401
+from go_map_reduce_spark.shipping import keep_spark_archive_directories
+
+# In a Python worker this stops every later task from re-reading the
+# Spark install's archives (see shipping.py). It runs before the operator
+# imports, so the zip importers those imports create come from the
+# swapped path hook and an invalidate_caches() made while they import is
+# already cheap.
+keep_spark_archive_directories()
+
+from go_map_reduce_spark import registry  # noqa: F401,E402
 
 # Importing the operator modules populates the registry.
 from go_map_reduce_spark.operators import (  # noqa: F401,E402

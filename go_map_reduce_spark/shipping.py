@@ -1,24 +1,68 @@
-"""Ship the go_map_reduce_spark package to Python workers.
+"""The go_map_reduce_spark package on Python workers: ship it from the
+driver, and keep the Spark install's archive directories in the worker.
 
-Functions defined inside this package (parity map/reduce fns, pandas
-UDFs) are pickled **by reference** — the worker re-imports their module.
-That works only if the package is importable on the worker, which is
-true when the driver's cwd happens to be the repo root and false
-otherwise (observed: ModuleNotFoundError from an executor when the
-driver ran elsewhere). The fix is the standard Spark mechanism: zip the
-package and ``addPyFile`` it once per SparkContext — exactly what
+Shipping. Functions defined inside this package (parity map/reduce fns,
+pandas UDFs) are pickled **by reference** — the worker re-imports their
+module. That works only if the package is importable on the worker,
+which is true when the driver's cwd happens to be the repo root and
+false otherwise (observed: ModuleNotFoundError from an executor when
+the driver ran elsewhere). The fix is the standard Spark mechanism: zip
+the package and ``addPyFile`` it once per SparkContext — exactly what
 spark-submit --py-files would do on a real cluster.
+
+Keeping. PySpark 4.1 calls ``importlib.invalidate_caches()`` at the
+start of every Python task (``pyspark/worker_util.py:144``,
+``setup_spark_files``). On CPython 3.11 that makes every
+``zipimport.zipimporter`` in the worker re-read its archive's whole
+central directory in pure Python (``zipimport.py:329-336``). The JVM
+puts three archives on the worker's ``PYTHONPATH``: pyspark.zip, the
+py4j source zip and the spark-core jar (5,359 entries, no ``.py``
+file). There is one importer per archive and per imported subpackage,
+so each task paid ~200 ms of worker CPU, even in a reused worker.
+``keep_spark_archive_directories`` runs when this package is imported
+inside a worker task (every engine map/reduce function and UDF arrives
+that way) and makes ``invalidate_caches`` a no-op for the archives on
+``PYTHONPATH``, which a Spark install never rewrites. Every other
+archive, the shipped zip and any later pyFile included, keeps the stock
+re-read, so a newly added pyFile is still seen. On the driver nothing
+changes.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
 
 _SHIPPED_ATTR = "_gmrs_pyfiles_shipped"
+_SPARK_ARCHIVES = frozenset(os.environ.get("PYTHONPATH", "").split(os.pathsep)) - {""}
+
+
+class _SparkArchiveImporter(zipimport.zipimporter):
+    """A zipimporter that never re-reads a Spark-install archive."""
+
+    def invalidate_caches(self):
+        if self.archive not in _SPARK_ARCHIVES:
+            super().invalidate_caches()
+
+
+def keep_spark_archive_directories() -> None:
+    """In a Python worker task, swap the zip path hook and the cached
+    zip importers for ``_SparkArchiveImporter``; on the driver, no-op."""
+    if TaskContext.get() is None:
+        return
+    sys.path_hooks[:] = [
+        _SparkArchiveImporter if hook is zipimport.zipimporter else hook
+        for hook in sys.path_hooks
+    ]
+    for importer in list(sys.path_importer_cache.values()):
+        if type(importer) is zipimport.zipimporter:
+            importer.__class__ = _SparkArchiveImporter
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:

@@ -250,6 +250,10 @@ def test_bench_detail_carries_stamp(tmp_path):
     assert stamp["git_head"] == (
         head.stdout.strip() if head.returncode == 0 else "unknown"
     )
+    if head.returncode == 0:
+        assert isinstance(stamp["git_dirty"], bool)
+    else:
+        assert stamp["git_dirty"] is None
 
 
 def test_plain_run_defaults_to_gitignored_local_artifact(tmp_path):
