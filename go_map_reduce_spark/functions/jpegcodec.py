@@ -32,6 +32,8 @@ EOBRUN resets at each marker.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import struct
 
@@ -174,9 +176,6 @@ def build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     to rebuild the dict once per 8x8 block, which dominated encode
     time; the construction itself is unchanged."""
     return dict(_build_codes_cached(tuple(bits), tuple(vals)))
-
-
-import functools  # noqa: E402
 
 
 @functools.lru_cache(maxsize=64)
@@ -403,6 +402,61 @@ def _dct_matrix():
     return m
 
 
+# A quantized coefficient this close to a .5 tie rounds by the last bits
+# of the float DCT, and those depend on the BLAS kernel's summation
+# order; _quantize decides such ties on the exact value instead.
+_TIE_EPS = 1e-9
+
+
+def _pow2_ints(values):
+    """Float64 ``values`` as Python ints over one power-of-two
+    denominator: returns ``(n, k)`` with ``values[i] == n[i] / 2**k``
+    exactly."""
+    ratios = [float(x).as_integer_ratio() for x in values]
+    k = max(d.bit_length() - 1 for _, d in ratios)
+    return [num << (k - d.bit_length() + 1) for num, d in ratios], k
+
+
+@functools.lru_cache(maxsize=4)
+def _dct_basis_ints(m_bytes: bytes):
+    """The DCT basis ``m[u, x] * m[v, y]`` of the 8x8 matrix in
+    ``m_bytes`` as exact ints: ``(basis, k)``, ``basis[u * 8 + v]`` the
+    64 products over (x, y) scaled by ``2**k``."""
+    import numpy as np
+
+    mi, km = _pow2_ints(np.frombuffer(m_bytes, dtype=np.float64))
+    basis = [
+        [mi[u * 8 + x] * mi[v * 8 + y] for x in range(8) for y in range(8)]
+        for u in range(8)
+        for v in range(8)
+    ]
+    return basis, 2 * km
+
+
+def _quantize(coef, centered, q, m):
+    """``rint(coef / q)`` as int64, where ``coef`` is the float
+    ``m @ centered @ m.T`` over [..., 8, 8] blocks and ``q`` the 8x8
+    quant table. A quotient within ``_TIE_EPS`` of a half-integer is
+    recomputed exactly over the float64 inputs and rounded half to
+    even, so the ints do not depend on the order in which ``coef`` was
+    summed."""
+    from fractions import Fraction
+
+    import numpy as np
+
+    ratio = coef / q
+    qc = np.rint(ratio)
+    near = np.abs(ratio - np.floor(ratio) - 0.5) < _TIE_EPS
+    if near.any():
+        basis, kb = _dct_basis_ints(np.ascontiguousarray(m, dtype=np.float64).tobytes())
+        for idx in zip(*np.nonzero(near)):
+            u, v = idx[-2:]
+            cn, kc = _pow2_ints(centered[idx[:-2]].ravel().tolist())
+            exact = sum(map(operator.mul, basis[u * 8 + v], cn))
+            qc[idx] = round(Fraction(exact, 1 << (kb + kc)) / Fraction(float(q[u, v])))
+    return qc.astype(np.int64)
+
+
 def _encode_block(
     w: "_BitWriter", block, q, m, prev_dc: int, dc_codes=None, ac_codes=None
 ) -> int:
@@ -410,10 +464,8 @@ def _encode_block(
     differential against ``prev_dc``); returns the new DC predictor.
     ``dc_codes``/``ac_codes`` select the Huffman table set (default:
     the shared table-0 spec)."""
-    import numpy as np
-
-    coef = m @ (block - 128.0) @ m.T
-    qc = np.rint(coef / q).astype(np.int64)
+    centered = block - 128.0
+    qc = _quantize(m @ centered @ m.T, centered, q, m)
     return _encode_zz(w, qc.ravel()[_ZZ_FLAT].tolist(), prev_dc,
                       dc_codes, ac_codes)
 
@@ -1395,7 +1447,8 @@ def _quantized_coefs(plane, q, m):
     # One batched matmul pair over all blocks: numpy dispatches the same
     # 8x8 GEMM per slice as the former per-block loop, so the float
     # results (and thus the quantized ints) are bitwise identical.
-    qc = np.rint((m @ (blocks - 128.0) @ m.T) / q).astype(np.int64)
+    centered = blocks - 128.0
+    qc = _quantize(m @ centered @ m.T, centered, q, m)
     return qc.reshape(bh, bw, 64)[:, :, _ZZ_FLAT]
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_map_reduce_spark.catalog import load_table
 from go_map_reduce_spark.functions.numeric import dsum, sql_dsum
+from go_map_reduce_spark.operators import dedup as _dedup  # noqa: F401  (oracle reuse)
 from go_map_reduce_spark.registry import ORACLES, query
 
 # --------------------------------------------------------------------------

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from go_map_reduce_spark.catalog import ensure_min_parallelism, load_table
+from go_map_reduce_spark.operators import advanced as _advanced  # noqa: F401  (oracle reuse)
 from go_map_reduce_spark.operators.dedup import _SQL_SHINGLES
 from go_map_reduce_spark.registry import ORACLES, query
 

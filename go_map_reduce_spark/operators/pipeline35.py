@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_map_reduce_spark.catalog import load_table
+from go_map_reduce_spark.operators import pipeline26 as _pipeline26  # noqa: F401  (oracle reuse)
 from go_map_reduce_spark.operators.advanced import _cc_largestar
 from go_map_reduce_spark.operators.dedup import minhash_near_dup_pairs
 from go_map_reduce_spark.operators.pipeline33 import (

@@ -1,5 +1,6 @@
 """The go_map_reduce_spark package on Python workers: ship it from the
-driver, and keep the Spark install's archive directories in the worker.
+driver, give every Python task one worker pool, and keep the Spark
+install's archive directories in the worker.
 
 Shipping. Functions defined inside this package (parity map/reduce fns,
 pandas UDFs) are pickled **by reference** — the worker re-imports their
@@ -9,6 +10,17 @@ false otherwise (observed: ModuleNotFoundError from an executor when
 the driver ran elsewhere). The fix is the standard Spark mechanism: zip
 the package and ``addPyFile`` it once per SparkContext — exactly what
 spark-submit --py-files would do on a real cluster.
+
+One pool. The JVM keeps one ``pyspark.daemon`` and its forked workers
+per distinct worker environment. RDD tasks (the parity map/reduce jobs)
+carry ``sc.environment``; the SQL Python runners (pandas UDFs,
+``mapInPandas``) add ``SPARK_SIMPLIFIED_TRACEBACK=1`` on top of it while
+``spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled`` is true,
+its default. That one variable gave a session a second daemon with its
+own workers. ``ensure_package_shipped`` copies it into
+``sc.environment`` before the session's first Python task, so both kinds
+of task reuse the same workers. The only visible change: an error in an
+RDD task gets the same simplified traceback a UDF error already gets.
 
 Keeping. PySpark 4.1 calls ``importlib.invalidate_caches()`` at the
 start of every Python task (``pyspark/worker_util.py:144``,
@@ -26,6 +38,10 @@ that way) and makes ``invalidate_caches`` a no-op for the archives on
 archive, the shipped zip and any later pyFile included, keeps the stock
 re-read, so a newly added pyFile is still seen. On the driver nothing
 changes.
+
+Inside a worker task the package itself imports no operator module (see
+``__init__.py``): a task imports only the modules its unpickled
+functions name.
 """
 
 from __future__ import annotations
@@ -40,6 +56,7 @@ from pyspark import TaskContext
 from pyspark.sql import SparkSession
 
 _SHIPPED_ATTR = "_gmrs_pyfiles_shipped"
+_SIMPLIFIED_TRACEBACK_CONF = "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled"
 _SPARK_ARCHIVES = frozenset(os.environ.get("PYTHONPATH", "").split(os.pathsep)) - {""}
 
 
@@ -51,10 +68,15 @@ class _SparkArchiveImporter(zipimport.zipimporter):
             super().invalidate_caches()
 
 
+def in_python_task() -> bool:
+    """Whether this process is running a Spark Python worker task."""
+    return TaskContext.get() is not None
+
+
 def keep_spark_archive_directories() -> None:
     """In a Python worker task, swap the zip path hook and the cached
     zip importers for ``_SparkArchiveImporter``; on the driver, no-op."""
-    if TaskContext.get() is None:
+    if not in_python_task():
         return
     sys.path_hooks[:] = [
         _SparkArchiveImporter if hook is zipimport.zipimporter else hook
@@ -66,10 +88,13 @@ def keep_spark_archive_directories() -> None:
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
-    """Idempotently add a zip of this package to the SparkContext."""
+    """Idempotently add a zip of this package to the SparkContext, and
+    give RDD tasks the worker environment SQL Python tasks get."""
     sc = spark.sparkContext
     if getattr(sc, _SHIPPED_ATTR, False):
         return
+    if spark.conf.get(_SIMPLIFIED_TRACEBACK_CONF, "true").lower() == "true":
+        sc.environment["SPARK_SIMPLIFIED_TRACEBACK"] = "1"
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zpath = os.path.join(
         tempfile.mkdtemp(prefix="gmrs_pyfiles_"), "go_map_reduce_spark.zip"

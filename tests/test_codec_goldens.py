@@ -130,3 +130,34 @@ def test_bmp_golden(case):
     assert [dec[0], dec[1], dec[2]] == case["decoded_dims"]
     assert hashlib.sha256(dec[3]).hexdigest() == case["decoded_sha"]
     _check_err(case["err_truncated"], decode_bmp, enc[:10])
+
+
+def test_jpeg_quantizer_ignores_summation_order():
+    """color444-16x8-twotable has DCT quotients within 1e-14 of a .5 tie
+    (its Cb DC reads 5.5000000000000036 one way, 5.499999999999998 the
+    other); the quantized ints must not depend on how the DCT was summed."""
+    import numpy as np
+
+    from go_map_reduce_spark.functions.jpegcodec import _dct_matrix, _quantize
+
+    case = next(c for c in GOLDENS["jpeg"] if c["case"] == "color444-16x8-twotable")
+    w, h = case["w"], case["h"]
+    img = np.frombuffer(_b(case["pixels"]), dtype=np.uint8).reshape(h, w, 3).astype(np.float64)
+    r_, g_, b_ = img[..., 0], img[..., 1], img[..., 2]
+    planes = [
+        0.299 * r_ + 0.587 * g_ + 0.114 * b_,
+        128.0 - 0.168736 * r_ - 0.331264 * g_ + 0.5 * b_,
+        128.0 + 0.5 * r_ - 0.418688 * g_ - 0.081312 * b_,
+    ]
+    q_custom = np.array([(i % 7) + 1 for i in range(64)], dtype=np.float64).reshape(8, 8)
+    m = _dct_matrix()
+    near_ties = 0
+    for plane, q in zip(planes, [np.ones((8, 8)), q_custom, q_custom]):
+        plane = np.clip(np.rint(plane), 0, 255)
+        centered = plane.reshape(h // 8, 8, w // 8, 8).transpose(0, 2, 1, 3) - 128.0
+        left = (m @ centered) @ m.T
+        right = m @ (centered @ m.T)
+        ratio = left / q
+        near_ties += int((np.abs(ratio - np.floor(ratio) - 0.5) < 1e-9).sum())
+        assert np.array_equal(_quantize(left, centered, q, m), _quantize(right, centered, q, m))
+    assert near_ties > 0
